@@ -63,8 +63,8 @@ def ingest_ndjson(
     input_glob: str,
     spec: TableSpec,
     **kwargs,
-) -> DataFrame:
-    """Read NDJSON file(s) → Bronze table (append). Returns the batch df."""
+) -> int:
+    """Read NDJSON file(s) → Bronze table (append). Returns the number of
+    rows this batch appended, counted by the write job itself."""
     bronze = wrap_bronze(spark.read.text(input_glob), **kwargs)
-    write_table(bronze, spec, mode="append")
-    return bronze
+    return write_table(bronze, spec, mode="append")

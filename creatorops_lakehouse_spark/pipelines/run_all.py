@@ -50,13 +50,15 @@ def run_all(
     ingested_at: str | None = None,
 ) -> RunStats:
     """Full pipeline over a lakehouse root directory. Deterministic when the
-    as_of/ingested_at parameters are pinned."""
+    as_of/ingested_at parameters are pinned. ``RunStats`` holds the rows
+    this run wrote to each table, as counted by the write jobs
+    (``write_table``'s return value) — no table is re-read to count it."""
     specs = lakehouse_specs(root)
     cfg = cfg or GeneratorConfig()
     events = generate_events(cfg)
     write_ndjson_partitioned(events, f"{root}/raw/events")
 
-    bronze = ingest_ndjson(
+    bronze_rows = ingest_ndjson(
         spark,
         f"{root}/raw/events/p_event_date=*/events.ndjson",
         specs["bronze_events_raw"],
@@ -67,11 +69,8 @@ def run_all(
         as_of_ts=as_of_ts,
         rejected_at=as_of_ts,
     )
-    write_table(silver_df, specs["silver_events"])
-    write_table(rejects_df, specs["silver_rejects"])
-    # an all-valid corpus writes an empty (schema-less) rejects dir — count
-    # from the in-memory frame, not a re-read
-    reject_rows = rejects_df.count()
+    silver_rows = write_table(silver_df, specs["silver_events"])
+    reject_rows = write_table(rejects_df, specs["silver_rejects"])
 
     silver = read_table(spark, specs["silver_events"])
     gold = {
@@ -81,17 +80,11 @@ def run_all(
         "gold_dropoff_rate": dropoff_rate_daily(silver, as_of_date),
         "gold_stage_bottlenecks": stage_bottlenecks(silver, as_of_date),
     }
-    gold_rows = {}
-    for key, df in gold.items():
-        df = df.persist()
-        write_table(df, specs[key])
-        # count the in-memory frame: an empty KPI (possible on tiny corpora)
-        # writes a schema-less dir that cannot be re-read
-        gold_rows[key] = df.count()
+    gold_rows = {key: write_table(df, specs[key]) for key, df in gold.items()}
 
     return RunStats(
-        bronze_rows=bronze.count(),
-        silver_rows=read_table(spark, specs["silver_events"]).count(),
+        bronze_rows=bronze_rows,
+        silver_rows=silver_rows,
         reject_rows=reject_rows,
         gold_rows=gold_rows,
     )

@@ -230,20 +230,18 @@ def events_medallion_e2e_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
         bronze_spec = TableSpec(
             "bronze.events", os.path.join(root, "bronze"), ("p_ingest_date",)
         )
-        ingest_ndjson(
+        batch1 = ingest_ndjson(
             spark, raw1, bronze_spec,
             ingest_id="batch1", ingested_at="2030-01-01 00:00:00",
         )
-        ingest_ndjson(
+        dups = ingest_ndjson(
             spark, raw2, bronze_spec,
             ingest_id="batch2", ingested_at="2030-01-01 01:00:00",
         )
-        bronze = read_table(spark, bronze_spec)
-        bronze_rows = bronze.count()
-        dups = int(bronze.filter(F.col("ingest_id") == "batch2").count())
+        bronze_rows = batch1 + dups
 
         good, bad = transform(
-            bronze,
+            read_table(spark, bronze_spec),
             as_of_ts="2030-01-02 00:00:00",
             rejected_at="2030-01-02 00:00:00",
         )

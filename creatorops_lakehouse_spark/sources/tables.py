@@ -24,7 +24,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 
 @dataclass(frozen=True)
@@ -45,21 +46,29 @@ def write_table(
     spec: TableSpec,
     mode: str = "overwrite",
     dynamic: bool = True,
-) -> None:
-    """Write a table in the reference's mode semantics.
+) -> int:
+    """Write a table in the reference's mode semantics and return the
+    number of rows written.
 
     mode="append"    → Bronze-style immutable append (S3).
     mode="overwrite" → Silver/Gold-style refresh (S4/S5); with ``dynamic``
     and a partitioned spec, only the partitions present in ``df`` are
     replaced (partitionOverwriteMode=dynamic) — the scalable form of the
     reference's full overwrite.
+
+    The count is observed at the top of the saved plan, so the write job
+    itself measures it: no second scan of ``df`` and no re-read of the
+    table (which an empty partitioned write leaves without a schema).
     """
-    writer = df.write.format(spec.format).mode(mode)
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    writer = observed.write.format(spec.format).mode(mode)
     if spec.partition_by:
         writer = writer.partitionBy(*spec.partition_by)
         if mode == "overwrite" and dynamic:
             writer = writer.option("partitionOverwriteMode", "dynamic")
     writer.save(spec.path)
+    return obs.get["rows"]
 
 
 def compact_table(
@@ -142,8 +151,6 @@ def sort_for_skipping(df: DataFrame, cols: list[str], target_files: int) -> Data
     min/max data-skipping stand-in for Delta ZORDER (reference guidance:
     sql/ddl/02_silver_events.sql:62). Files become disjoint key ranges, so
     point/range queries on ``cols`` prune most files from the scan."""
-    from pyspark.sql import functions as F
-
     return df.repartitionByRange(target_files, *[F.col(c) for c in cols]).sortWithinPartitions(
         *cols
     )
@@ -176,8 +183,6 @@ def zorder_key(cols: list[str], bits: int = 21) -> "F.Column":
     aggregate, and skewed values cost curve balance, not correctness —
     heavy skew callers can pre-transform (e.g. log) the column.
     """
-    from pyspark.sql import functions as F
-
     if bits * len(cols) > 63:
         raise ValueError(f"bits*cols = {bits * len(cols)} exceeds BIGINT range")
     top = (1 << bits) - 1
@@ -209,8 +214,6 @@ def zorder_for_skipping(
     every file's footer min/max is tight on ALL ``cols``. One extra tiny
     aggregate (per-column min/max) + the same single range shuffle as
     ``sort_for_skipping``."""
-    from pyspark.sql import functions as F
-
     aggs = []
     for j, c in enumerate(cols):
         aggs.append(F.min(F.col(c).cast("long")).alias(f"_zmin_{j}"))
@@ -244,8 +247,6 @@ def upsert_table(
     ``MERGE INTO`` (with the partition keys in the match condition to prune
     the rewrite — SURVEY.md §7.4 scale note).
     """
-    import pyspark.sql.functions as F
-
     try:
         existing = read_table(spark, spec)
     except Exception:  # first write — table does not exist yet

@@ -6,11 +6,14 @@ from __future__ import annotations
 import hashlib
 
 import pyspark.sql.functions as F
+import pytest
 
 from creatorops_lakehouse_spark.operators.sampling import (
     deterministic_sample,
+    epoch_orders,
     hash_bucket,
     per_group_sample,
+    split_column,
     stratified_split,
 )
 
@@ -171,6 +174,23 @@ def test_dsir_acceptance_is_deterministic(spark):
         )
 
     assert run() == run()
+
+
+def test_split_column_rejects_fractions_over_one(spark):
+    with pytest.raises(ValueError, match="sum to"):
+        split_column(F.col("doc_id"), {"train": 0.9, "eval": 0.2})
+
+
+def test_epoch_orders_rejects_existing_epoch_column(spark):
+    df = spark.createDataFrame([(1, 0)], ["doc_id", "epoch"])
+    with pytest.raises(ValueError, match="already has 'epoch'"):
+        epoch_orders(df, "doc_id", [0, 1])
+
+
+def test_epoch_orders_rejects_empty_epoch_list(spark):
+    df = spark.createDataFrame([(1,)], ["doc_id"])
+    with pytest.raises(ValueError, match="empty epoch list"):
+        epoch_orders(df, "doc_id", [])
 
 
 def test_epoch_order_permutes_differently_but_reproducibly(spark):
